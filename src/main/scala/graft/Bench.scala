@@ -3,18 +3,27 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every declared query at SPARK_GRAFT_SF_DIR and
-  * prints exactly ONE JSON line. Queries are forced through the `noop` sink —
-  * `.count()` would let Catalyst prune the very projections being measured.
+  * prints two JSON lines, the full per-query line and a short total line.
+  * Queries are forced through the `noop` sink — `.count()` would let
+  * Catalyst prune the very projections being measured.
   * One warmup pass at sf0.001 amortizes JVM/codegen startup so the numbers
   * reflect steady-state throughput (what a long-running cluster job sees).
   */
 object Bench {
+  /** SPARK_GRAFT_CPUS as a core count. It goes unquoted into the JSON lines
+    * and into the BENCH_FULL_c<cpus>.json name, so anything but a positive
+    * integer (e.g. local[*]'s "*") fails before any query runs. */
+  private[graft] def parseCpus(raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -72,7 +81,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus%s,"stat":"min2_lt${singleThreshold}%.0fs_else_single"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus%d,"stat":"min2_lt${singleThreshold}%.0fs_else_single"}"""
     println(line)
     // r11 post-mortem: the full line (~15 KB for 426 queries) exceeds the
     // driver's stdout-tail capture window, so the driver parsed NOTHING from
@@ -80,7 +89,7 @@ object Bench {
     // SHORT summary line AFTER it — same metric/value, no per-query map —
     // guaranteed inside any tail window, so the total always parses.
     val shortLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"cpus":$cpus%s,"sf":"$sfDir","queries_in":"BENCH_FULL.json"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"cpus":$cpus%d,"sf":"$sfDir","queries_in":"BENCH_FULL.json"}"""
     println(shortLine)
     // the driver's stdout-tail capture is lossy past ~4 KB, which truncated
     // the per-query map in earlier rounds — persist the complete artifact

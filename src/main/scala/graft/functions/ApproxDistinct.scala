@@ -1,21 +1,11 @@
 package graft.functions
 
-import graft.sketch.{Hll, LinearCounter, Sketch, SketchMergeException}
+import graft.sketch.{Hll, LinearCounter, Sketch, SketchCodec}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Mutable aggregation buffer: at most one live sketch, lazily created on the
-  * first non-null row — mirrors the reference's lazy init
-  * (UDAFCardinalityEstimator.java:353-362) and its NULL-for-empty-group
-  * semantics (:329-331). Unlike the reference, serializing an all-null
-  * partition does NOT NPE (SURVEY §2 quirks): it round-trips as 0 bytes.
-  */
-final class SketchBuffer(var sketch: Sketch) extends Serializable
 
 object ApproxDistinct {
   val HllDefaultB = 16      // HLL_DEFAULT_B, UDAFCardinalityEstimator.java:89
@@ -31,25 +21,15 @@ object ApproxDistinct {
 }
 
 /** `approx_distinct(x[, algo[, precision]])` — approximate COUNT(DISTINCT) as
-  * a distributive, re-aggregatable sketch aggregate.
-  *
-  * Spark-native re-expression of the reference UDAF
-  * (UDAFCardinalityEstimator.java:69-344): `TypedImperativeAggregate` is the
-  * exact Catalyst analogue of Hive's `GenericUDAFEvaluator` object-buffer
-  * protocol — `createAggregationBuffer`≅getNewAggregationBuffer(:225),
-  * `update`≅iterate(:237), `serialize`/`deserialize`≅terminatePartial(:276)/
-  * partial decode(:303-316), `merge`≅merge(:297), `eval`≅terminate(:327).
-  * Catalyst's AggUtils splits it into Partial/Final automatically, so map-side
-  * combine (the thing that makes this scale: one sketch per group crosses the
-  * shuffle, never raw rows) needs no code here. Executes under
-  * ObjectHashAggregateExec.
+  * a distributive, re-aggregatable sketch aggregate: the Spark-native
+  * re-expression of the reference UDAF (see [[SketchAggregate]]).
   *
   * Input paths, as in the reference:
   *  - atomic child (:237-258): hash the typed value (64-bit xxHash, NOT the
   *    reference's 32-bit string-murmur — see SURVEY §2 quirks) and offer;
   *  - sketch struct child (:259-265) or, with `mergeBinary`, a raw serialized
-  *    sketch BinaryType child: deserialize + union (re-aggregation of stored
-  *    sketches — E3 in SURVEY §3).
+  *    sketch BinaryType child: merge the stored sketch in (re-aggregation of
+  *    stored sketches — E3 in SURVEY §3).
   */
 case class ApproxDistinct(
     child: Expression,
@@ -58,7 +38,7 @@ case class ApproxDistinct(
     mergeBinary: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SketchBuffer] {
+  extends SketchAggregate[Sketch] {
 
   import ApproxDistinct._
 
@@ -76,57 +56,35 @@ case class ApproxDistinct(
   override def withNewInputAggBufferOffset(newOffset: Int): ApproxDistinct =
     copy(inputAggBufferOffset = newOffset)
 
-  override def nullable: Boolean = true // empty group => NULL (ref :329-331)
   override def dataType: DataType = resultType
   override def prettyName: String = if (mergeBinary) "sketch_merge_agg" else "approx_distinct"
 
-  // -- config, fixed at bind time (the reference re-reads it per row, :242-245;
-  //    we deliberately do not — SURVEY §2 quirks) --
+  override protected def codec: SketchCodec[Sketch] = Sketch
+  override protected def literals: Seq[(String, Expression)] =
+    Seq("algo" -> algoExpr, "precision" -> precisionExpr)
+  override protected def storedName: String = "sketch"
+
   @transient private lazy val algoName: String =
     Option(algoExpr.eval()).map(_.toString.toUpperCase(java.util.Locale.ROOT)).getOrElse("HLL")
-  @transient private lazy val precision: Int =
-    Option(precisionExpr.eval()).map(_.asInstanceOf[Number].intValue()).getOrElse(-1)
+  @transient private lazy val precision: Int = intArg(precisionExpr, -1)
 
-  private def isSketchStruct(dt: DataType): Boolean = dt match {
-    case s: StructType =>
-      s.fields.length == 3 && s.fieldNames.sameElements(Array("type", "cardinality", "binary"))
-    case _ => false
-  }
-  @transient private lazy val mergeMode: Boolean =
-    mergeBinary || isSketchStruct(child.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!algoExpr.foldable || !precisionExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        "approx_distinct: algo and precision must be foldable literals")
+  override protected def paramError: Option[String] =
     if (algoName != "HLL" && algoName != "LC")
-      return TypeCheckResult.TypeCheckFailure(
-        s"approx_distinct: estimator type must be 'hll' or 'lc', got '$algoName'")
-    if (precision != -1) {
-      if (algoName == "HLL" && (precision < 4 || precision > 24))
-        return TypeCheckResult.TypeCheckFailure(
-          s"approx_distinct: HLL precision b must be in [4,24], got $precision")
-      if (algoName == "LC" && precision <= 0)
-        return TypeCheckResult.TypeCheckFailure(
-          s"approx_distinct: LC bitmap size must be positive, got $precision")
-    }
-    child.dataType match {
-      case _ if mergeBinary =>
-        if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          s"sketch_merge_agg expects a BINARY serialized sketch, got ${child.dataType.sql}")
-      case s: StructType =>
-        if (isSketchStruct(s)) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          s"approx_distinct: struct input must be a sketch struct ${resultType.sql}, got ${s.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"approx_distinct: unsupported input type ${dt.sql}")
-    }
+      Some(s"estimator type must be 'hll' or 'lc', got '$algoName'")
+    else if (precision != -1 && algoName == "HLL" && (precision < 4 || precision > 24))
+      Some(s"HLL precision b must be in [4,24], got $precision")
+    else if (precision != -1 && algoName == "LC" && precision <= 0)
+      Some(s"LC bitmap size must be positive, got $precision")
+    else None
+
+  override protected def inputError(dt: DataType): Option[String] = dt match {
+    case s: StructType if !SketchExprs.isSketchStruct(s) =>
+      Some(s"struct input must be a sketch struct ${resultType.sql}, got ${s.sql}")
+    case _: StructType => None
+    case _ => super.inputError(dt)
   }
 
-  private def newSketch(): Sketch =
+  override protected def newSketch(): Sketch =
     if (algoName == "HLL") new Hll(if (precision == -1) HllDefaultB else precision)
     else new LinearCounter(if (precision == -1) LcDefaultSize else precision)
 
@@ -134,50 +92,10 @@ case class ApproxDistinct(
   @transient private lazy val hashFn: Any => Long =
     TypedXxHash.kernel(child.dataType, HashSeed)
 
-  override def createAggregationBuffer(): SketchBuffer = new SketchBuffer(null)
+  override protected def offer(
+      slot: SketchSlot[Sketch], value: Any, input: InternalRow): Unit =
+    slot.sketch.offerHash(hashFn(value))
 
-  override def update(buffer: SketchBuffer, input: InternalRow): SketchBuffer = {
-    val v = child.eval(input)
-    if (v != null) { // nulls ignored, ref :238-240
-      if (mergeMode) {
-        val bytes =
-          if (mergeBinary) v.asInstanceOf[Array[Byte]]
-          else {
-            val row = v.asInstanceOf[InternalRow]
-            if (row.isNullAt(2)) null else row.getBinary(2)
-          }
-        if (bytes != null && bytes.nonEmpty)
-          // wire-format merge: no per-row intermediate sketch (q298's
-          // merge-row churn was this bench's heaviest, least stable entry)
-          buffer.sketch = Sketch.mergeSerializedInto(bytes, buffer.sketch)
-      } else {
-        if (buffer.sketch == null) buffer.sketch = newSketch()
-        buffer.sketch.offerHash(hashFn(v))
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: SketchBuffer, input: SketchBuffer): SketchBuffer = {
-    if (input.sketch != null) {
-      if (buffer.sketch == null) buffer.sketch = input.sketch
-      else buffer.sketch.mergeInPlace(input.sketch)
-    }
-    buffer
-  }
-
-  override def eval(buffer: SketchBuffer): Any = {
-    if (buffer.sketch == null) null // ref terminate() :329-331
-    else {
-      val s = buffer.sketch
-      InternalRow(UTF8String.fromString(s.algo), s.estimate, s.serialize())
-    }
-  }
-
-  override def serialize(buffer: SketchBuffer): Array[Byte] =
-    if (buffer.sketch == null) Array.emptyByteArray else buffer.sketch.serialize()
-
-  override def deserialize(bytes: Array[Byte]): SketchBuffer =
-    if (bytes.isEmpty) new SketchBuffer(null)
-    else new SketchBuffer(Sketch.deserialize(bytes))
+  override protected def result(sketch: Sketch): Any =
+    InternalRow(UTF8String.fromString(sketch.algo), sketch.estimate, sketch.serialize())
 }

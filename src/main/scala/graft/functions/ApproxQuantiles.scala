@@ -1,20 +1,18 @@
 package graft.functions
 
-import graft.sketch.KllDoubles
+import graft.sketch.{KllDoubles, SketchCodec}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `approx_quantiles(x, array(p1, p2, ...)[, k])` — mergeable KLL quantile
   * estimates (see [[graft.sketch.KllDoubles]]). Returns one retained-item
   * estimate per requested probability as `ARRAY<DOUBLE>`; NULL for an empty
   * group. The quantile companion to `approx_distinct` (cardinality) and
-  * `approx_top_k` (frequency), on the same `TypedImperativeAggregate`
-  * pattern: one O(k·log log n) sketch per group crosses the shuffle.
+  * `approx_top_k` (frequency) ([[SketchAggregate]]): one O(k·log log n)
+  * sketch per group crosses the shuffle.
   *
   * `kll_sketch_agg(x[, k])` (emitBinary) returns the serialized sketch for
   * storing; `kll_merge_agg(bin, probs[, k])` (mergeBinary) re-aggregates
@@ -30,7 +28,7 @@ case class ApproxQuantiles(
     emitBinary: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoubles] {
+  extends SketchAggregate[KllDoubles] {
 
   def this(child: Expression, probs: Expression) =
     this(child, probs, Literal(KllDoubles.DefaultK))
@@ -45,7 +43,6 @@ case class ApproxQuantiles(
   override def withNewInputAggBufferOffset(newOffset: Int): ApproxQuantiles =
     copy(inputAggBufferOffset = newOffset)
 
-  override def nullable: Boolean = true
   override def dataType: DataType =
     if (emitBinary) BinaryType else ArrayType(DoubleType, containsNull = false)
   override def prettyName: String =
@@ -53,80 +50,31 @@ case class ApproxQuantiles(
     else if (mergeBinary) "kll_merge_agg"
     else "approx_quantiles"
 
-  @transient private lazy val k: Int =
-    Option(kExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(KllDoubles.DefaultK)
-  @transient private lazy val probs: Array[Double] =
-    Option(probsExpr.eval()) match {
-      case Some(a: ArrayData) => a.toDoubleArray()
-      case _ => Array.empty[Double]
-    }
+  override protected def codec: SketchCodec[KllDoubles] = KllDoubles
+  override protected def literals: Seq[(String, Expression)] =
+    Seq("probabilities" -> probsExpr, "k" -> kExpr)
+  override protected def storedName: String = "KLL sketch"
+  override protected def mergesIntoNewSketch: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!probsExpr.foldable || !kExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: probabilities and k must be foldable literals")
-    if (k < 8 || k > 65535)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: k must be in [8, 65535], got $k")
-    if (!emitBinary) {
-      probsExpr.dataType match {
-        case ArrayType(DoubleType, _) =>
-        case dt => return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: probabilities must be ARRAY<DOUBLE>, got ${dt.sql}")
-      }
-      if (probs.isEmpty)
-        return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: at least one probability required")
-      if (probs.exists(p => p < 0.0 || p > 1.0 || p.isNaN))
-        return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: probabilities must be in [0,1], got ${probs.mkString(",")}")
-    }
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case _ if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"kll_merge_agg expects a BINARY serialized KLL sketch, got ${child.dataType.sql}")
-      case _: NumericType => TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: expects a numeric column, got ${dt.sql}")
-    }
-  }
+  @transient private lazy val k: Int = intArg(kExpr, KllDoubles.DefaultK)
+  @transient private lazy val probs: Array[Double] = QuantileArgs.probabilities(probsExpr)
+  @transient private lazy val toDouble: Any => Double = QuantileArgs.toDouble(child.dataType)
 
-  @transient private lazy val toDouble: Any => Double = child.dataType match {
-    case DoubleType => v => v.asInstanceOf[Double]
-    case FloatType => v => v.asInstanceOf[Float].toDouble
-    case LongType => v => v.asInstanceOf[Long].toDouble
-    case IntegerType => v => v.asInstanceOf[Int].toDouble
-    case ShortType => v => v.asInstanceOf[Short].toDouble
-    case ByteType => v => v.asInstanceOf[Byte].toDouble
-    case _: DecimalType => v => v.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-    case _ => v => v.asInstanceOf[Number].doubleValue()
-  }
+  override protected def paramError: Option[String] =
+    if (k < 8 || k > 65535) Some(s"k must be in [8, 65535], got $k")
+    else if (emitBinary) None
+    else QuantileArgs.probabilitiesError(probsExpr)
 
-  override def createAggregationBuffer(): KllDoubles = new KllDoubles(k)
+  override protected def inputError(dt: DataType): Option[String] = QuantileArgs.inputError(dt)
 
-  override def update(buffer: KllDoubles, input: InternalRow): KllDoubles = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) buffer.mergeInPlace(KllDoubles.deserialize(v.asInstanceOf[Array[Byte]]))
-      else buffer.update(toDouble(v))
-    }
-    buffer
-  }
+  override protected def newSketch(): KllDoubles = new KllDoubles(k)
 
-  override def merge(buffer: KllDoubles, input: KllDoubles): KllDoubles = {
-    buffer.mergeInPlace(input)
-    buffer
-  }
+  override protected def offer(
+      slot: SketchSlot[KllDoubles], value: Any, input: InternalRow): Unit =
+    slot.sketch.update(toDouble(value))
 
-  override def eval(buffer: KllDoubles): Any = {
-    if (buffer.n == 0L) null
-    else if (emitBinary) buffer.serialize()
-    else new GenericArrayData(probs.map(buffer.quantile))
-  }
-
-  override def serialize(buffer: KllDoubles): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): KllDoubles =
-    KllDoubles.deserialize(bytes)
+  override protected def result(sketch: KllDoubles): Any =
+    if (sketch.n == 0L) null
+    else if (emitBinary) sketch.serialize()
+    else new GenericArrayData(probs.map(sketch.quantile))
 }

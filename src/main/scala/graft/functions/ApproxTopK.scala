@@ -1,11 +1,9 @@
 package graft.functions
 
-import graft.sketch.SpaceSaving
+import graft.sketch.{SketchCodec, SpaceSaving}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,11 +22,10 @@ object ApproxTopK {
 }
 
 /** `approx_top_k(item[, k[, capacity]])` — mergeable SpaceSaving heavy
-  * hitters: the frequent-items companion to `approx_distinct`, built on the
-  * same `TypedImperativeAggregate` pattern (see [[ApproxDistinct]] scaladoc
-  * for the Catalyst phase wiring). One capacity-bounded summary per group
-  * crosses the shuffle regardless of input size, so a global top-k over
-  * 100 TB ships a few KB per map task — never a per-key count table.
+  * hitters: the frequent-items companion to `approx_distinct`
+  * ([[SketchAggregate]]). One capacity-bounded summary per group crosses the
+  * shuffle regardless of input size, so a global top-k over 100 TB ships a
+  * few KB per map task — never a per-key count table.
   *
   * `topk_sketch_agg(item[, capacity])` (emitBinary) returns the serialized
   * summary instead of the top-k, and `topk_merge_agg(bin[, k[, capacity]])`
@@ -55,7 +52,7 @@ case class ApproxTopK(
     emitBinary: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SpaceSaving] {
+  extends SketchAggregate[SpaceSaving] {
 
   def this(child: Expression) = this(child, Literal(10), Literal(ApproxTopK.DefaultCapacity))
   def this(child: Expression, k: Expression) =
@@ -72,7 +69,6 @@ case class ApproxTopK(
   override def withNewInputAggBufferOffset(newOffset: Int): ApproxTopK =
     copy(inputAggBufferOffset = newOffset)
 
-  override def nullable: Boolean = true
   override def dataType: DataType =
     if (emitBinary) BinaryType else ApproxTopK.resultType
   override def prettyName: String =
@@ -80,68 +76,41 @@ case class ApproxTopK(
     else if (mergeBinary) "topk_merge_agg"
     else "approx_top_k"
 
-  @transient private lazy val k: Int =
-    Option(kExpr.eval()).map(_.asInstanceOf[Number].intValue()).getOrElse(10)
-  @transient private lazy val capacity: Int =
-    Option(capacityExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(ApproxTopK.DefaultCapacity)
+  override protected def codec: SketchCodec[SpaceSaving] = SpaceSaving
+  override protected def literals: Seq[(String, Expression)] =
+    Seq("k" -> kExpr, "capacity" -> capacityExpr)
+  override protected def storedName: String = "summary"
+  override protected def mergesIntoNewSketch: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!kExpr.foldable || !capacityExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: k and capacity must be foldable literals")
-    if (k < 1)
-      return TypeCheckResult.TypeCheckFailure(s"$prettyName: k must be >= 1, got $k")
-    if (capacity < k)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: capacity must be >= k, got capacity=$capacity k=$k")
-    weightExpr.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-      case dt => return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: weight must be an integral column, got ${dt.sql}")
-    }
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case _ if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"topk_merge_agg expects a BINARY serialized summary, got ${child.dataType.sql}")
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"approx_top_k expects a STRING item column (cast first), got ${dt.sql}")
-    }
+  @transient private lazy val k: Int = intArg(kExpr, 10)
+  @transient private lazy val capacity: Int = intArg(capacityExpr, ApproxTopK.DefaultCapacity)
+
+  override protected def paramError: Option[String] =
+    if (k < 1) Some(s"k must be >= 1, got $k")
+    else if (capacity < k) Some(s"capacity must be >= k, got capacity=$capacity k=$k")
+    else if (!isIntegral(weightExpr.dataType))
+      Some(s"weight must be an integral column, got ${weightExpr.dataType.sql}")
+    else None
+
+  override protected def inputError(dt: DataType): Option[String] =
+    if (dt == StringType) None
+    else Some(s"expects a STRING item column (cast first), got ${dt.sql}")
+
+  override protected def newSketch(): SpaceSaving = new SpaceSaving(capacity)
+
+  override protected def offer(
+      slot: SketchSlot[SpaceSaving], value: Any, input: InternalRow): Unit = {
+    val w = weightExpr.eval(input)
+    // null weight => row contributes nothing (matches null-item skip)
+    if (w != null)
+      // buffer-backed UTF8String probes the map by bytes; cloned only on insert
+      slot.sketch.offer(value.asInstanceOf[UTF8String], w.asInstanceOf[Number].longValue())
   }
 
-  override def createAggregationBuffer(): SpaceSaving = new SpaceSaving(capacity)
-
-  override def update(buffer: SpaceSaving, input: InternalRow): SpaceSaving = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) buffer.mergeInPlace(SpaceSaving.deserialize(v.asInstanceOf[Array[Byte]]))
-      else {
-        val w = weightExpr.eval(input)
-        // null weight => row contributes nothing (matches null-item skip)
-        if (w != null)
-          // buffer-backed UTF8String probes the map by bytes; cloned only on insert
-          buffer.offer(v.asInstanceOf[UTF8String], w.asInstanceOf[Number].longValue())
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: SpaceSaving, input: SpaceSaving): SpaceSaving = {
-    buffer.mergeInPlace(input)
-    buffer
-  }
-
-  override def eval(buffer: SpaceSaving): Any = {
-    if (buffer.n == 0L) null
-    else if (emitBinary) buffer.serialize()
-    else new GenericArrayData(buffer.topK(k).map { case (item, est, err) =>
+  override protected def result(sketch: SpaceSaving): Any =
+    if (sketch.n == 0L) null
+    else if (emitBinary) sketch.serialize()
+    else new GenericArrayData(sketch.topK(k).map { case (item, est, err) =>
       InternalRow(UTF8String.fromString(item), est, err)
     }.toArray[Any])
-  }
-
-  override def serialize(buffer: SpaceSaving): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): SpaceSaving =
-    SpaceSaving.deserialize(bytes)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import graft.sketch.BloomFilter
+import graft.sketch.{BloomFilter, SketchCodec}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
@@ -22,10 +21,10 @@ object BloomAgg {
   * the few-MB filter, and drop non-matching fact rows at the scan — the
   * shuffle then carries only rows that can match. Merge is bitwise OR, so
   * partial aggregation is exact and stored filters re-aggregate
-  * (`bloom_merge_agg`) like every other sketch in the engine.
-  *
-  * Same `TypedImperativeAggregate` pattern as [[ApproxDistinct]]; hashes via
-  * [[TypedXxHash]] so [[MightContain]] probes agree by construction.
+  * (`bloom_merge_agg`) like every other sketch in the engine
+  * ([[SketchAggregate]]). An empty group gives the empty filter, not NULL.
+  * Hashes via [[TypedXxHash]] so [[MightContain]] probes agree by
+  * construction.
   */
 case class BloomAgg(
     child: Expression,
@@ -34,7 +33,7 @@ case class BloomAgg(
     mergeBinary: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter] {
+  extends SketchAggregate[BloomFilter] {
 
   def this(child: Expression) =
     this(child, Literal(BloomAgg.DefaultNumBits), Literal(BloomAgg.DefaultNumHashes))
@@ -51,64 +50,37 @@ case class BloomAgg(
   override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
     copy(inputAggBufferOffset = newOffset)
 
-  override def nullable: Boolean = true
   override def dataType: DataType = BinaryType
   override def prettyName: String = if (mergeBinary) "bloom_merge_agg" else "bloom_agg"
 
-  @transient private lazy val numBits: Int =
-    Option(numBitsExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(BloomAgg.DefaultNumBits)
-  @transient private lazy val numHashes: Int =
-    Option(numHashesExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(BloomAgg.DefaultNumHashes)
+  override protected def codec: SketchCodec[BloomFilter] = BloomFilter
+  override protected def literals: Seq[(String, Expression)] =
+    Seq("numBits" -> numBitsExpr, "numHashes" -> numHashesExpr)
+  override protected def storedName: String = "bloom filter"
+  override protected def mergesIntoNewSketch: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!numBitsExpr.foldable || !numHashesExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numBits and numHashes must be foldable literals")
+  @transient private lazy val numBits: Int = intArg(numBitsExpr, BloomAgg.DefaultNumBits)
+  @transient private lazy val numHashes: Int = intArg(numHashesExpr, BloomAgg.DefaultNumHashes)
+
+  override protected def paramError: Option[String] =
     if (numBits < 64 || numBits % 64 != 0)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numBits must be a positive multiple of 64, got $numBits")
-    if (numHashes < 1 || numHashes > 16)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numHashes must be in [1,16], got $numHashes")
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case _ if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"bloom_merge_agg expects a BINARY serialized bloom filter, got ${child.dataType.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"bloom_agg: unsupported input type ${dt.sql}")
-    }
-  }
+      Some(s"numBits must be a positive multiple of 64, got $numBits")
+    else if (numHashes < 1 || numHashes > 16)
+      Some(s"numHashes must be in [1,16], got $numHashes")
+    else None
 
   @transient private lazy val hashFn: Any => Long =
     TypedXxHash.kernel(child.dataType, BloomAgg.HashSeed)
 
-  override def createAggregationBuffer(): BloomFilter =
-    new BloomFilter(numBits, numHashes)
+  override protected def newSketch(): BloomFilter = new BloomFilter(numBits, numHashes)
 
-  override def update(buffer: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) buffer.mergeInPlace(BloomFilter.deserialize(v.asInstanceOf[Array[Byte]]))
-      else buffer.offerHash(hashFn(v))
-    }
-    buffer
-  }
+  override protected def offer(
+      slot: SketchSlot[BloomFilter], value: Any, input: InternalRow): Unit =
+    slot.sketch.offerHash(hashFn(value))
 
-  override def merge(buffer: BloomFilter, input: BloomFilter): BloomFilter = {
-    buffer.mergeInPlace(input)
-    buffer
-  }
+  override protected def result(sketch: BloomFilter): Any = sketch.serialize()
 
-  override def eval(buffer: BloomFilter): Any = buffer.serialize()
-
-  override def serialize(buffer: BloomFilter): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.deserialize(bytes)
+  override protected def emptyResult: Any = result(newSketch())
 }
 
 /** `might_contain(bloom, x)` — probe a serialized Bloom filter. `false`

@@ -1,21 +1,18 @@
 package graft.functions
 
-import graft.sketch.DdSketch
+import graft.sketch.{DdSketch, SketchCodec}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `dd_quantiles(x, array(p1, ...)[, alpha])` — mergeable DDSketch
   * quantile estimates with a RELATIVE-error guarantee: each returned
   * estimate is within α of the true quantile VALUE (vs KLL's rank-error
   * bound — see [[graft.sketch.DdSketch]] for why both families exist).
-  * Returns `ARRAY<DOUBLE>`, NULL for an empty group. Same
-  * `TypedImperativeAggregate` pattern as `approx_quantiles`: one
-  * log-bucket histogram per group crosses the shuffle, partial
+  * Returns `ARRAY<DOUBLE>`, NULL for an empty group. One log-bucket
+  * histogram per group crosses the shuffle ([[SketchAggregate]]); partial
   * aggregation is exact bucket-count addition (deterministic — any
   * partitioning yields the identical sketch below the bucket cap).
   *
@@ -32,7 +29,7 @@ case class DdQuantiles(
     emitBinary: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DdSketch] {
+  extends SketchAggregate[DdSketch] {
 
   def this(child: Expression, probs: Expression) =
     this(child, probs, Literal(DdSketch.DefaultAlpha))
@@ -48,7 +45,6 @@ case class DdQuantiles(
   override def withNewInputAggBufferOffset(newOffset: Int): DdQuantiles =
     copy(inputAggBufferOffset = newOffset)
 
-  override def nullable: Boolean = true
   override def dataType: DataType =
     if (emitBinary) BinaryType else ArrayType(DoubleType, containsNull = false)
   override def prettyName: String =
@@ -56,82 +52,31 @@ case class DdQuantiles(
     else if (mergeBinary) "dd_merge_agg"
     else "dd_quantiles"
 
-  @transient private lazy val alpha: Double =
-    Option(alphaExpr.eval()).map(_.asInstanceOf[Number].doubleValue())
-      .getOrElse(DdSketch.DefaultAlpha)
-  @transient private lazy val probs: Array[Double] =
-    Option(probsExpr.eval()) match {
-      case Some(a: ArrayData) => a.toDoubleArray()
-      case _ => Array.empty[Double]
-    }
+  override protected def codec: SketchCodec[DdSketch] = DdSketch
+  override protected def literals: Seq[(String, Expression)] =
+    Seq("probabilities" -> probsExpr, "alpha" -> alphaExpr)
+  override protected def storedName: String = "ddsketch"
+  override protected def mergesIntoNewSketch: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!probsExpr.foldable || !alphaExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: probabilities and alpha must be foldable literals")
-    if (alpha < 1e-4 || alpha > 0.5)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: alpha must be in [1e-4, 0.5], got $alpha")
-    if (!emitBinary) {
-      probsExpr.dataType match {
-        case ArrayType(DoubleType, _) =>
-        case dt => return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: probabilities must be ARRAY<DOUBLE>, got ${dt.sql}")
-      }
-      if (probs.isEmpty)
-        return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: at least one probability required")
-      if (probs.exists(p => p < 0.0 || p > 1.0 || p.isNaN))
-        return TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: probabilities must be in [0,1], got ${probs.mkString(",")}")
-    }
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case _ if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"dd_merge_agg expects a BINARY serialized ddsketch, got ${child.dataType.sql}")
-      case _: NumericType => TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: expects a numeric column, got ${dt.sql}")
-    }
-  }
+  @transient private lazy val alpha: Double = doubleArg(alphaExpr, DdSketch.DefaultAlpha)
+  @transient private lazy val probs: Array[Double] = QuantileArgs.probabilities(probsExpr)
+  @transient private lazy val toDouble: Any => Double = QuantileArgs.toDouble(child.dataType)
 
-  @transient private lazy val toDouble: Any => Double = child.dataType match {
-    case DoubleType => v => v.asInstanceOf[Double]
-    case FloatType => v => v.asInstanceOf[Float].toDouble
-    case LongType => v => v.asInstanceOf[Long].toDouble
-    case IntegerType => v => v.asInstanceOf[Int].toDouble
-    case ShortType => v => v.asInstanceOf[Short].toDouble
-    case ByteType => v => v.asInstanceOf[Byte].toDouble
-    case _: DecimalType =>
-      v => v.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-    case _ => v => v.asInstanceOf[Number].doubleValue()
-  }
+  override protected def paramError: Option[String] =
+    if (alpha < 1e-4 || alpha > 0.5) Some(s"alpha must be in [1e-4, 0.5], got $alpha")
+    else if (emitBinary) None
+    else QuantileArgs.probabilitiesError(probsExpr)
 
-  override def createAggregationBuffer(): DdSketch = new DdSketch(alpha)
+  override protected def inputError(dt: DataType): Option[String] = QuantileArgs.inputError(dt)
 
-  override def update(buffer: DdSketch, input: InternalRow): DdSketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary)
-        buffer.mergeInPlace(DdSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-      else buffer.update(toDouble(v))
-    }
-    buffer
-  }
+  override protected def newSketch(): DdSketch = new DdSketch(alpha)
 
-  override def merge(buffer: DdSketch, input: DdSketch): DdSketch = {
-    buffer.mergeInPlace(input)
-    buffer
-  }
+  override protected def offer(
+      slot: SketchSlot[DdSketch], value: Any, input: InternalRow): Unit =
+    slot.sketch.update(toDouble(value))
 
-  override def eval(buffer: DdSketch): Any = {
-    if (buffer.n == 0L) null
-    else if (emitBinary) buffer.serialize()
-    else new GenericArrayData(probs.map(buffer.quantile))
-  }
-
-  override def serialize(buffer: DdSketch): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): DdSketch =
-    DdSketch.deserialize(bytes)
+  override protected def result(sketch: DdSketch): Any =
+    if (sketch.n == 0L) null
+    else if (emitBinary) sketch.serialize()
+    else new GenericArrayData(probs.map(sketch.quantile))
 }

@@ -80,15 +80,16 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
   }
 }
 
-object BloomFilter {
+object BloomFilter extends SketchCodec[BloomFilter] {
   val WireTag: Byte = 0x42 // 'B'
+
+  def serialize(sketch: BloomFilter): Array[Byte] = sketch.serialize()
+
+  def merge(into: BloomFilter, other: BloomFilter): BloomFilter = { into.mergeInPlace(other); into }
 
   def deserialize(bytes: Array[Byte]): BloomFilter = {
     val buf = java.nio.ByteBuffer.wrap(bytes)
-    val tag = buf.get()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a bloom filter: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(buf.get(), WireTag, "a bloom filter")
     val numBits = buf.getInt
     val numHashes = buf.getInt
     if (numBits < 64 || numBits % 64 != 0 || numHashes < 1 || numHashes > 16)

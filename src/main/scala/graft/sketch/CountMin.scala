@@ -92,7 +92,7 @@ final class CountMin(val depth: Int, val width: Int) extends Serializable {
   }
 }
 
-object CountMin {
+object CountMin extends SketchCodec[CountMin] {
   val WireTag: Byte = 0x43 // 'C'; other sketch families use their own tags
   val DefaultDepth = 5
   val DefaultWidth = 4096
@@ -105,10 +105,7 @@ object CountMin {
     * [[deserialize]] and [[mergeSerializedInto]]. */
   private def readHeader(bytes: Array[Byte]): (Int, Int, Long) = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
-    val tag = bb.get()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a count-min sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(bb.get(), WireTag, "a count-min sketch")
     val depth = bb.getInt
     val width = bb.getInt
     if (depth < 1 || depth > 16 || width < 16 || width > MaxWidth ||
@@ -133,12 +130,16 @@ object CountMin {
     cm
   }
 
+  def serialize(sketch: CountMin): Array[Byte] = sketch.serialize()
+
+  def merge(into: CountMin, other: CountMin): CountMin = { into.mergeInPlace(other); into }
+
   /** Merge a SERIALIZED sketch directly into `target` — the counter-add
     * twin of [[graft.sketch.Sketch.mergeSerializedInto]]: no intermediate
     * 160 KB counter array per input row in `cm_merge_agg`'s update path
     * (a default-shape sketch is depth 5 × width 4096 longs). Identical
     * validation, counters and total weight as deserialize + mergeInPlace. */
-  def mergeSerializedInto(bytes: Array[Byte], target: CountMin): CountMin = {
+  override def mergeSerializedInto(bytes: Array[Byte], target: CountMin): CountMin = {
     if (target == null) return deserialize(bytes)
     val (depth, width, n) = readHeader(bytes)
     if (depth != target.depth || width != target.width)

@@ -124,7 +124,7 @@ final class CountSketch(val depth: Int, val width: Int) extends Serializable {
   }
 }
 
-object CountSketch {
+object CountSketch extends SketchCodec[CountSketch] {
   val WireTag: Byte = 0x47 // 'G' (aGms); distinct from every other family tag
   val DefaultDepth = 5
   val DefaultWidth = 1024
@@ -154,12 +154,13 @@ object CountSketch {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  def serialize(sketch: CountSketch): Array[Byte] = sketch.serialize()
+
+  def merge(into: CountSketch, other: CountSketch): CountSketch = { into.mergeInPlace(other); into }
+
   def deserialize(bytes: Array[Byte]): CountSketch = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a count-sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(in.readByte(), WireTag, "a count-sketch")
     val depth = in.readInt()
     val width = in.readInt()
     if (depth < 1 || depth > 16 || width < 16 || width > MaxWidth ||

@@ -147,7 +147,7 @@ final class DdSketch(val alpha: Double) extends Serializable {
   }
 }
 
-object DdSketch {
+object DdSketch extends SketchCodec[DdSketch] {
   val WireTag: Byte = 0x44 // 'D'
   val DefaultAlpha = 0.01
   /** Per-store bucket cap: 4096 buckets at α=0.01 span ~35 orders of
@@ -155,13 +155,14 @@ object DdSketch {
   val MaxBuckets = 4096
   val ZeroEps = 1e-12
 
+  def serialize(sketch: DdSketch): Array[Byte] = sketch.serialize()
+
+  def merge(into: DdSketch, other: DdSketch): DdSketch = { into.mergeInPlace(other); into }
+
   def deserialize(bytes: Array[Byte]): DdSketch = {
     val in = new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a ddsketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(in.readByte(), WireTag, "a ddsketch")
     val alpha = in.readDouble()
     if (alpha < 1e-4 || alpha > 0.5)
       throw new SketchMergeException(s"corrupted ddsketch payload: alpha=$alpha")

@@ -170,16 +170,17 @@ final class KllDoubles(initialK: Int) extends Serializable {
   }
 }
 
-object KllDoubles {
+object KllDoubles extends SketchCodec[KllDoubles] {
   val WireTag: Byte = 0x4B // 'K'
   val DefaultK = 256
 
+  def serialize(sketch: KllDoubles): Array[Byte] = sketch.serialize()
+
+  def merge(into: KllDoubles, other: KllDoubles): KllDoubles = { into.mergeInPlace(other); into }
+
   def deserialize(bytes: Array[Byte]): KllDoubles = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a KLL sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(in.readByte(), WireTag, "a KLL sketch")
     val k = in.readInt()
     if (k < 8 || k > 65535)
       throw new SketchMergeException(s"corrupted KLL payload: k=$k")

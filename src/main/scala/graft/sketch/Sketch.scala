@@ -35,7 +35,7 @@ sealed trait Sketch extends Serializable {
 
 final class SketchMergeException(msg: String) extends RuntimeException(msg)
 
-object Sketch {
+object Sketch extends SketchCodec[Sketch] {
   val TagHll: Byte = 1
   val TagLc: Byte = 2
   val TagHllSparse: Byte = 3
@@ -44,6 +44,12 @@ object Sketch {
   private[sketch] def readInt(bytes: Array[Byte], off: Int): Int =
     ((bytes(off) & 0xff) << 24) | ((bytes(off + 1) & 0xff) << 16) |
       ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+
+  /** Sparse payload length check. `expected` is computed in Long: an entry
+    * count near 2^30 would wrap the Int arithmetic back to the short actual
+    * length, pass the check and then allocate that many entries. */
+  private[sketch] def requireLength(bytes: Array[Byte], expected: Long, what: String): Unit =
+    require(bytes.length == expected, s"$what length ${bytes.length} != $expected")
 
   private[sketch] def writeInt(bytes: Array[Byte], off: Int, v: Int): Unit = {
     bytes(off) = (v >>> 24).toByte
@@ -73,7 +79,7 @@ object Sketch {
       case TagHllSparse =>
         val b = bytes(1).toInt
         val n = readInt(bytes, 2)
-        require(bytes.length == 6 + 4 * n, s"sparse HLL length ${bytes.length} != ${6 + 4 * n}")
+        requireLength(bytes, 6 + 4L * n, "sparse HLL")
         val entries = new Array[(Int, Byte)](n)
         var i = 0
         while (i < n) {
@@ -97,7 +103,7 @@ object Sketch {
       case TagLcSparse =>
         val size = readInt(bytes, 1)
         val n = readInt(bytes, 5)
-        require(bytes.length == 9 + 4 * n, s"sparse LC length ${bytes.length} != ${9 + 4 * n}")
+        requireLength(bytes, 9 + 4L * n, "sparse LC")
         val idxs = new Array[Int](n)
         var i = 0
         while (i < n) {
@@ -113,6 +119,10 @@ object Sketch {
     }
   }
 
+  def serialize(sketch: Sketch): Array[Byte] = sketch.serialize()
+
+  def merge(into: Sketch, other: Sketch): Sketch = { into.mergeInPlace(other); into }
+
   /** Merge a SERIALIZED sketch directly into `target`, without materializing
     * an intermediate [[Sketch]]. Semantically identical to
     * `target.mergeInPlace(deserialize(bytes))` — the target's register/bit
@@ -124,7 +134,7 @@ object Sketch {
     * sparse sketch PER INPUT ROW, and that churn — not the OR itself — was
     * the bench's heaviest, least stable entry (±2–3× same-session GC drift).
     * Returns the merged sketch (deserialized fresh when `target` is null). */
-  def mergeSerializedInto(bytes: Array[Byte], target: Sketch): Sketch = {
+  override def mergeSerializedInto(bytes: Array[Byte], target: Sketch): Sketch = {
     if (target == null) return deserialize(bytes)
     require(bytes != null && bytes.length >= 1, "empty sketch payload")
     target match {
@@ -276,7 +286,7 @@ final class Hll private (val b: Int, private var dense: Array[Byte],
       if (ob != b)
         throw new SketchMergeException(s"cannot merge HLL(b=$b) with HLL(b=$ob)")
       val n = Sketch.readInt(bytes, 2)
-      require(bytes.length == 6 + 4 * n, s"sparse HLL length ${bytes.length} != ${6 + 4 * n}")
+      Sketch.requireLength(bytes, 6 + 4L * n, "sparse HLL")
       var i = 0
       while (i < n) {
         val off = 6 + 4 * i
@@ -493,7 +503,7 @@ final class LinearCounter private (val sizeBytes: Int, private var dense: Array[
         throw new SketchMergeException(
           s"cannot merge LC(size=$sizeBytes) with LC(size=$size)")
       val n = Sketch.readInt(bytes, 5)
-      require(bytes.length == 9 + 4 * n, s"sparse LC length ${bytes.length} != ${9 + 4 * n}")
+      Sketch.requireLength(bytes, 9 + 4L * n, "sparse LC")
       var i = 0
       while (i < n) {
         val idx = Sketch.readInt(bytes, 9 + 4 * i)

@@ -184,15 +184,16 @@ final class SpaceSaving(initialCapacity: Int) extends Serializable {
   }
 }
 
-object SpaceSaving {
+object SpaceSaving extends SketchCodec[SpaceSaving] {
   val WireTag: Byte = 0x53 // 'S'; HLL/LC sketches use their own tags
+
+  def serialize(sketch: SpaceSaving): Array[Byte] = sketch.serialize()
+
+  def merge(into: SpaceSaving, other: SpaceSaving): SpaceSaving = { into.mergeInPlace(other); into }
 
   def deserialize(bytes: Array[Byte]): SpaceSaving = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not an approx_top_k summary: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(in.readByte(), WireTag, "an approx_top_k summary")
     val capacity = in.readInt()
     if (capacity < 1)
       throw new SketchMergeException(s"corrupted approx_top_k payload: capacity $capacity")

@@ -226,7 +226,7 @@ final class ThetaSketch private (
   }
 }
 
-object ThetaSketch {
+object ThetaSketch extends SketchCodec[ThetaSketch] {
   /** Exclusive upper bound of the 63-bit position space (= 2⁶³ − 1 ≈ 2⁶³;
     * the one-part-in-2⁶³ approximation is far below any sketch error). */
   val SentinelTheta: Long = Long.MaxValue
@@ -261,12 +261,13 @@ object ThetaSketch {
     new ThetaSketch(k, theta, heap, entries.length)
   }
 
+  def serialize(sketch: ThetaSketch): Array[Byte] = sketch.serialize()
+
+  def merge(into: ThetaSketch, other: ThetaSketch): ThetaSketch = mergeInto(into, other)
+
   def deserialize(bytes: Array[Byte]): ThetaSketch = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a theta sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
+    checkTag(in.readByte(), WireTag, "a theta sketch")
     val k = in.readInt()
     if (k < MinK || k > MaxK)
       throw new SketchMergeException(s"corrupted theta sketch: k=$k")

@@ -18,25 +18,23 @@ class SketchAggregateSpec extends AnyFunSuite {
   /** One aggregate in one mode. `agg` renders the SQL call over a column;
     * `store` (merge rows) renders the expression that yields a stored BINARY
     * sketch (or, for approx_distinct, the stored result struct) from `x`. */
-  private case class Row8(
+  private case class AggCase(
       name: String,
       agg: String => String,
       store: Option[String => String],
       orderIndependent: Boolean,
-      zeroBytesSkipped: Boolean = true,
       empty: Any = null)
 
   private val emptyBloom = new BloomFilter(4096, 3).serialize()
   private val probs = "array(0.5D, 0.9D)"
 
   private def build(name: String, agg: String => String, orderIndependent: Boolean,
-      empty: Any = null): Row8 = Row8(name, agg, None, orderIndependent, empty = empty)
+      empty: Any = null): AggCase = AggCase(name, agg, None, orderIndependent, empty = empty)
   private def merge(name: String, agg: String => String, store: String => String,
-      orderIndependent: Boolean, zeroBytesSkipped: Boolean = true,
-      empty: Any = null): Row8 =
-    Row8(name, agg, Some(store), orderIndependent, zeroBytesSkipped, empty)
+      orderIndependent: Boolean, empty: Any = null): AggCase =
+    AggCase(name, agg, Some(store), orderIndependent, empty)
 
-  private val rows: Seq[Row8] = Seq(
+  private val rows: Seq[AggCase] = Seq(
     build("approx_distinct hll", c => s"approx_distinct($c)", true),
     merge("sketch_merge_agg hll", c => s"sketch_merge_agg($c)",
       c => s"approx_distinct($c).binary", true),
@@ -47,18 +45,18 @@ class SketchAggregateSpec extends AnyFunSuite {
       c => s"approx_distinct($c)", true),
     build("approx_top_k", c => s"approx_top_k(CAST($c AS STRING), 3, 16)", false),
     merge("topk_merge_agg", c => s"topk_merge_agg($c, 3, 16)",
-      c => s"topk_sketch_agg(CAST($c AS STRING), 16)", false, zeroBytesSkipped = false),
+      c => s"topk_sketch_agg(CAST($c AS STRING), 16)", false),
     build("approx_quantiles", c => s"approx_quantiles($c, $probs, 16)", false),
     merge("kll_merge_agg", c => s"kll_merge_agg($c, $probs, 16)",
-      c => s"kll_sketch_agg($c, 16)", false, zeroBytesSkipped = false),
+      c => s"kll_sketch_agg($c, 16)", false),
     build("dd_quantiles", c => s"dd_quantiles($c, $probs, 0.02D)", true),
     merge("dd_merge_agg", c => s"dd_merge_agg($c, $probs, 0.02D)",
-      c => s"dd_sketch_agg($c, 0.02D)", true, zeroBytesSkipped = false),
+      c => s"dd_sketch_agg($c, 0.02D)", true),
     build("cm_sketch_agg", c => s"cm_sketch_agg($c, 256, 3)", true),
     merge("cm_merge_agg", c => s"cm_merge_agg($c)", c => s"cm_sketch_agg($c, 256, 3)", true),
     build("bloom_agg", c => s"bloom_agg($c, 4096, 3)", true, empty = emptyBloom),
     merge("bloom_merge_agg", c => s"bloom_merge_agg($c, 4096, 3)",
-      c => s"bloom_agg($c, 4096, 3)", true, zeroBytesSkipped = false, empty = emptyBloom),
+      c => s"bloom_agg($c, 4096, 3)", true, empty = emptyBloom),
     build("agms_sketch_agg", c => s"agms_sketch_agg($c, 256, 3)", true),
     merge("agms_merge_agg", c => s"agms_merge_agg($c)",
       c => s"agms_sketch_agg($c, 256, 3)", true),
@@ -89,13 +87,13 @@ class SketchAggregateSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(built.collect().toSeq ++ nulls, 2), schema).cache()
   }
 
-  private def grouped(df: DataFrame, r: Row8, c: String): Map[Int, Any] = {
+  private def grouped(df: DataFrame, r: AggCase, c: String): Map[Int, Any] = {
     df.createOrReplaceTempView("sketch_agg_in")
     spark.sql(s"SELECT g, ${r.agg(c)} AS r FROM sketch_agg_in GROUP BY g")
       .collect().map(row => row.getInt(0) -> row.get(1)).toMap
   }
 
-  private def global(df: DataFrame, r: Row8, c: String): Any = {
+  private def global(df: DataFrame, r: AggCase, c: String): Any = {
     df.createOrReplaceTempView("sketch_agg_in")
     spark.sql(s"SELECT ${r.agg(c)} AS r FROM sketch_agg_in").head().get(0)
   }
@@ -126,6 +124,7 @@ class SketchAggregateSpec extends AnyFunSuite {
       }
     }
 
+    // a 0-byte stored sketch means "no sketch" in every family
     if (r.store.nonEmpty) test(s"${r.name}: 0-byte stored rows") {
       val dt = df.schema(c).dataType
       val zero: Any =
@@ -133,13 +132,11 @@ class SketchAggregateSpec extends AnyFunSuite {
         else Row("HLL", 0L, Array.emptyByteArray)
       val extra = spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(0, zero), Row(1, zero)), 1), df.schema)
-      if (r.zeroBytesSkipped) {
-        val plain = grouped(df, r, c)
-        val padded = grouped(df.union(extra), r, c)
-        Seq(0, 1, 2).foreach { g =>
-          assert(sameValue(padded(g), plain(g)), s"group $g")
-        }
-      } else intercept[Exception](grouped(df.union(extra), r, c))
+      val plain = grouped(df, r, c)
+      val padded = grouped(df.union(extra), r, c)
+      Seq(0, 1, 2).foreach { g =>
+        assert(sameValue(padded(g), plain(g)), s"group $g")
+      }
     }
 
     if (r.orderIndependent) test(s"${r.name}: 1 and 8 partitions give byte-equal results") {

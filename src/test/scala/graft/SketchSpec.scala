@@ -225,4 +225,23 @@ class SketchSpec extends AnyFunSuite {
     (1L to 10000L).foreach(v => lc.offerHash(hash(v)))
     assert(lc.estimate == 32)
   }
+
+  test("sparse entry counts that overflow Int length arithmetic are rejected") {
+    // n = 0x40000001: 6 + 4n and 9 + 4n wrap to the payload's own length in
+    // Int arithmetic, which would pass the length check and then allocate n
+    // entries
+    val n = 0x40000001
+    def withCount(header: Array[Byte], total: Int): Array[Byte] = {
+      val out = java.util.Arrays.copyOf(header, total)
+      java.nio.ByteBuffer.wrap(out, header.length, 4).putInt(n)
+      out
+    }
+    val hll = withCount(Array(Sketch.TagHllSparse, 12.toByte), 10)
+    val lc = withCount(Array(Sketch.TagLcSparse, 0, 0, 1, 0), 13) // 256-byte bitmap
+    assert(hll.length == (6 + 4 * n) && lc.length == (9 + 4 * n))
+    intercept[IllegalArgumentException](Sketch.deserialize(hll))
+    intercept[IllegalArgumentException](Sketch.mergeSerializedInto(hll, new Hll(12)))
+    intercept[IllegalArgumentException](Sketch.deserialize(lc))
+    intercept[IllegalArgumentException](Sketch.mergeSerializedInto(lc, new LinearCounter(256)))
+  }
 }
